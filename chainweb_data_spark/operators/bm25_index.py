@@ -56,7 +56,6 @@ from ..streaming.publish import (
     live_partition_values,
     publish_batch,
     read_published,
-    rewrite_published_many,
 )
 
 #: PKs for the unified single-flip commit (publish_batch pks=).
@@ -205,59 +204,6 @@ def bm25_update_index(
         )
         compact_published(spark, out_dir, "bm25_meta")
     return snap
-
-
-def migrate_bm25_index(spark: SparkSession, out_dir: str) -> int:
-    """One-shot migration of a pre-r9 narrow-bucket index (16 buckets,
-    O(corpus/16) probe cost forever) to the current ``BUCKET_HEX`` layout
-    (256 term-sorted buckets, probe bytes O(postings(query))) — the
-    migrate-don't-strand convention of ``migrate_dedup_index`` /
-    ``migrate_curation_store`` applied to the one store r9 left behind
-    (r9 verdict "What's wrong" #2).
-
-    Re-derives ``key_bucket`` over the live postings and df tables at the
-    target width and republishes BOTH in ONE log flip
-    (``rewrite_published_many`` — a probe sees the old layout or the new,
-    never a mix of widths; ``_index_bucket_width`` would refuse a mix
-    loudly).  File shape matches a fresh build: one file per bucket
-    direction via ``repartition(key_bucket)``, rows term-sorted
-    (``POSTINGS_SORT``) with the partition column leading the sort so the
-    planner's own Sort is the one eliminated (see ``_stage_table``).
-    The meta table is width-free and untouched; probes are bitwise
-    unchanged (bucketing only places rows, scores never read it).
-
-    Idempotent: an index already at the target width returns 0 without
-    committing (replaying a crashed migration just re-runs the rewrite;
-    single-writer like every maintenance op here).  Returns the number of
-    postings+df rows migrated."""
-    width = _index_bucket_width(out_dir)
-    if width is None or width == BUCKET_HEX:
-        return 0
-    postings = read_published(spark, out_dir, "bm25_postings")
-    dft = read_published(spark, out_dir, "bm25_df")
-    if postings is None or dft is None:
-        raise ValueError(
-            f"migrate_bm25_index: incomplete index at {out_dir!r}"
-        )
-
-    def _rebucket(df: DataFrame, sort: tuple[str, ...]) -> DataFrame:
-        return (
-            df.drop("key_bucket")
-            .withColumn("key_bucket", _term_bucket(F.col("term")))
-            .repartition("key_bucket")
-            .sortWithinPartitions("key_bucket", *sort)
-        )
-
-    p_fixed = _rebucket(postings, POSTINGS_SORT)
-    d_fixed = _rebucket(dft, ("term", "batch_id"))
-    n = p_fixed.count() + d_fixed.count()
-    rewrite_published_many(
-        spark,
-        out_dir,
-        {"bm25_postings": p_fixed, "bm25_df": d_fixed},
-        op="migrate",
-    )
-    return n
 
 
 def bm25_build_index(

@@ -15,6 +15,19 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: ceiling of the default driver heap, in MiB (48g)
+_MAX_DRIVER_MEM_MB = 48 * 1024
+
+
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` when ``SPARK_DRIVER_MEM`` is unset: half the
+    machine's physical memory, capped at 48g.  A heap sized past the box
+    gets the process OOM-killed instead of spilling; big machines keep
+    the 48g cap."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(_MAX_DRIVER_MEM_MB, phys_bytes // 2**21)}m"
+
 
 def get_spark(
     app_name: str = "chainweb-data-spark",
@@ -33,7 +46,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # driver testdata stores TIMESTAMP(NANOS) which Spark has no type

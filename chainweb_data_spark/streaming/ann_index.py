@@ -63,7 +63,7 @@ class AnnIndexFormatError(RuntimeError):
     format.  Digit-only partition values read back as INT under partition
     type inference (the same fragility class the 'h'/'k' prefixes removed
     elsewhere), and the pruned probe / merge probe filter on 'c'-prefixed
-    strings only — pre-migration members would silently stop matching and
+    strings only — such members would silently stop matching and
     replays would re-append.  Refusing at resume is the loud option."""
 
 
@@ -83,37 +83,12 @@ def check_members_format(out_dir: str) -> None:
     bad = unprefixed_member_cells(out_dir)
     if bad:
         raise AnnIndexFormatError(
-            f"ann_members at {out_dir!r} has pre-migration key_bucket "
+            f"ann_members at {out_dir!r} has unprefixed key_bucket "
             f"partitions {bad}: probes and merge pruning match only "
             "'c'-prefixed cell values, so this history would be silently "
-            "skipped and replays would duplicate. Run "
-            "chainweb_data_spark.streaming.ann_index.migrate_ann_index("
-            "spark, out_dir) once to re-derive key_bucket and republish, "
-            "then resume the sink."
+            "skipped and replays would duplicate; rebuild the store "
+            "(delete it and replay the feed through the current sink)."
         )
-
-
-def migrate_ann_index(spark: SparkSession, out_dir: str) -> int:
-    """One-shot format migration: re-derive ``key_bucket`` = 'c' + cell
-    over the whole members table and republish as ONE log commit
-    (``publish.rewrite_published``).  Idempotent: already-prefixed rows
-    re-derive to themselves.  Returns the row count migrated."""
-    from .publish import rewrite_published
-
-    members = read_published(spark, out_dir, MEMBERS_TABLE)
-    if members is None:
-        return 0
-    kb = F.col("key_bucket").cast("string")
-    fixed = (
-        members.withColumn(
-            "key_bucket",
-            F.when(kb.startswith("c"), kb).otherwise(F.concat(F.lit("c"), kb)),
-        )
-        .repartition("key_bucket")
-    )
-    n = fixed.count()
-    rewrite_published(spark, out_dir, MEMBERS_TABLE, fixed)
-    return n
 
 
 def update_ann_index(

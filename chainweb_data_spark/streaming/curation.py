@@ -51,7 +51,6 @@ continuous form a 100 TB training-data pipeline runs.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -77,8 +76,7 @@ class CurationStoreFormatError(RuntimeError):
     unified single-commit sink reads the index through the PARENT log, so
     resuming against a two-log store would silently see an EMPTY index —
     every historical near-dup missed.  Refusing at resume is the loud
-    option; ``migrate_curation_store`` adopts the index tables into the
-    parent log (metadata-only, no data rewrite)."""
+    option."""
 
 
 def _is_legacy_two_log_store(out_dir: str) -> bool:
@@ -91,91 +89,6 @@ def _is_legacy_two_log_store(out_dir: str) -> bool:
         return True  # index log exists but no parent log at all
     tables = read_manifest(out_dir)["tables"]
     return not any(t.startswith(INDEX_PREFIX) for t in tables)
-
-
-def migrate_curation_store(spark: SparkSession, out_dir: str) -> list[str]:
-    """Adopt a two-log store's dedup-index tables into the parent
-    transaction log as ``dedup_index/<table>`` entries — ONE parent
-    commit, metadata only (the physical directories are identical in both
-    layouts, so file lists and footer stats copy over verbatim).  The
-    sub-log is then retired (renamed ``_manifest.migrated``) so the old
-    path cannot resume divergently.  A pre-decontamination
-    ``curation_log`` (no ``n_contam`` column) is backfilled with 0 in the
-    SAME commit — the table is one row per batch, so the rewrite is tiny,
-    and leaving it would hand the resumed sink a mixed-schema table the
-    check-schema guard rightly refuses.  Idempotent: a store already
-    unified returns [] untouched.  Returns the adopted table names."""
-    from .publish import (
-        _manifest_path,
-        _stage_table,
-        _write_manifest,
-        ensure_manifest,
-        read_manifest,
-    )
-
-    if not _is_legacy_two_log_store(out_dir):
-        return []
-    sub = os.path.join(out_dir, INDEX_SUBDIR)
-    sub_manifest = read_manifest(sub)
-    parent = ensure_manifest(out_dir)
-    new_tables = dict(parent["tables"])
-    new_stats = {t: dict(s) for t, s in parent.get("stats", {}).items()}
-    adopted = []
-    for name, files in sub_manifest["tables"].items():
-        unified = INDEX_PREFIX + name
-        new_tables[unified] = list(files)
-        st = sub_manifest.get("stats", {}).get(name)
-        if st:
-            new_stats[unified] = dict(st)
-        adopted.append(unified)
-    # n_contam backfill: rewrite the (tiny) summary table with the round-7
-    # column so the resumed sink never appends a second schema beside the
-    # old one.  Staged like any publish; the swap rides the adoption commit.
-    log_files = new_tables.get("curation_log", [])
-    ldir = os.path.join(out_dir, "curation_log.parquet")
-    if log_files:
-        old = spark.read.parquet(*[os.path.join(ldir, f) for f in log_files])
-        if "n_contam" not in old.columns:
-            rewritten = old.select(
-                "batch_id",
-                "n_in",
-                "n_kept",
-                "n_quality",
-                "n_exact",
-                F.lit(0).cast("long").alias("n_contam"),
-                "n_near",
-            ).coalesce(1)
-            # stage against an EMPTY probe view (unique batch_ids already)
-            files, fstats = _stage_table(
-                spark,
-                rewritten,
-                out_dir,
-                "curation_log__migrated",
-                ("batch_id",),
-            )
-            mdir = os.path.join(out_dir, "curation_log__migrated.parquet")
-            moved, mstats = [], {}
-            for rel in files:
-                dest = os.path.join(ldir, rel)
-                os.makedirs(os.path.dirname(dest) or ldir, exist_ok=True)
-                os.rename(os.path.join(mdir, rel), dest)
-                moved.append(rel)
-                if rel in fstats:
-                    mstats[rel] = fstats[rel]
-            shutil.rmtree(mdir, ignore_errors=True)
-            new_tables["curation_log"] = sorted(moved)
-            new_stats["curation_log"] = mstats
-    _write_manifest(
-        out_dir,
-        {
-            "version": parent["version"] + 1,
-            "tables": new_tables,
-            "stats": new_stats,
-            "op": "adopt-index",
-        },
-    )
-    os.rename(_manifest_path(sub), _manifest_path(sub) + ".migrated")
-    return sorted(adopted)
 
 
 def prepare_benchmark(
@@ -253,8 +166,7 @@ def curate_batch(
     directories as before).  A crash anywhere leaves the batch wholly
     absent; the old "between the two commits" window (index folded, batch
     not yet curated) no longer exists.  Stores written by the pre-unified
-    two-log layout refuse to resume with ``CurationStoreFormatError`` —
-    ``migrate_curation_store`` adopts them (metadata-only).
+    two-log layout refuse to resume with ``CurationStoreFormatError``.
     ``atomic=False`` falls back to per-table merge appends.
 
     ``compact_every`` — the long-run file bound, same knob as
@@ -269,8 +181,8 @@ def curate_batch(
             f"curation store at {out_dir!r} was written by the two-log "
             "layout (dedup_index/_manifest exists, parent log has no "
             "dedup_index/* tables): the unified sink would silently probe "
-            "an EMPTY index. Run migrate_curation_store(spark, out_dir) "
-            "once, then resume."
+            "an EMPTY index; rebuild the store (delete it and replay the "
+            "feed through the current sink)."
         )
     scored = (
         lang_id(quality_features(docs, text_col), text_col)
@@ -724,7 +636,7 @@ def dataset_snapshot(
     once and reads through it — record the returned version beside the
     training run, and any later ``dataset_snapshot(spark, out, version=v)``
     re-reads the byte-identical document set no matter how many batches,
-    compactions, or migrations landed since.
+    compactions, or rewrites landed since.
 
     Without ``pin`` that promise is bounded by the store's ``vacuum``
     retention horizon (``MAINT_KEEP_VERSIONS`` of compaction churn can

@@ -17,9 +17,8 @@ streaming/listen.py) so each batch costs O(batch + hits):
   inference to string — an all-digit dir set from a small batch would
   read back as INT and crash the next probe's cast.  FORMAT NOTE: an
   index written before the prefix existed has unprefixed dirs the
-  pruned probe no longer matches — migrate by reading the table,
-  re-deriving key_bucket, and republishing; per-partition compaction
-  keeps dir names and is NOT sufficient).  The cross-era probe BROADCASTS the batch's banded rows against
+  pruned probe no longer matches — it is refused with
+  ``DedupIndexFormatError``; rebuild the store).  The cross-era probe BROADCASTS the batch's banded rows against
   this table — a map-side join: the index is never shuffled, only scanned
   (partition-pruned to the batch's key_buckets when the batch is narrow).
 - ``shingle_sets.parquet`` — (doc_id, _sh array, key_bucket): per-doc
@@ -90,7 +89,7 @@ _PKS = {
 class DedupIndexFormatError(RuntimeError):
     """A stored ``minhash_bands`` table predates the 'h'-prefixed
     key_bucket format.  The pruned cross-era probe filters on 'h'-prefixed
-    partition values only, so pre-migration history would silently stop
+    partition values only, so such history would silently stop
     matching — every historical near-dup missed, no error.  Refusing at
     resume is the only loud option (round-6 advice)."""
 
@@ -113,75 +112,13 @@ def unprefixed_band_buckets(
 def check_bands_format(out_dir: str, table: str = "minhash_bands") -> None:
     bad = unprefixed_band_buckets(out_dir, table)
     if bad:
-        prefix = table[: -len("minhash_bands")]
-        fix = (
-            f"migrate_dedup_index(spark, {out_dir!r}"
-            + (f", table_prefix={prefix!r})" if prefix else ")")
-        )
         raise DedupIndexFormatError(
-            f"{table} at {out_dir!r} has pre-migration key_bucket "
+            f"{table} at {out_dir!r} has unprefixed key_bucket "
             f"partitions {bad}: the pruned cross-era probe matches only "
             "'h'-prefixed values, so this history would be silently "
-            "skipped (missed near-dups). Run "
-            f"chainweb_data_spark.streaming.dedup_index.{fix} once to "
-            "re-derive key_bucket and republish, then resume the sink."
+            "skipped (missed near-dups); rebuild the store (delete it and "
+            "replay the feed through the current sink)."
         )
-
-
-def migrate_dedup_index(
-    spark: SparkSession,
-    out_dir: str,
-    atomic: bool = True,
-    table_prefix: str = "",
-) -> int:
-    """One-shot format migration: re-derive ``key_bucket`` ('h' + first
-    hex char of bucket) over the whole bands table and republish.  On the
-    txlog layout the rewrite commits as ONE log entry
-    (``publish.rewrite_published`` — readers see old or migrated, never a
-    mix; per-partition compaction keeps dir names and is NOT sufficient);
-    the legacy layout swaps directories via the park-and-rename move
-    (``maintenance.migrate_flat_to_bucketed``'s discipline).  Idempotent:
-    already-prefixed rows re-derive to themselves.
-
-    ``table_prefix`` mirrors :func:`update_dedup_index`'s: a unified
-    curation store keeps the bands under ``dedup_index/minhash_bands`` in
-    the PARENT log, and migrating the unprefixed name there would resolve
-    an empty table, "succeed" with 0 rows, and leave the store
-    unresumable (round-7 advice).  Returns the row count migrated."""
-    from .publish import _manifest_path, rewrite_published
-
-    t_bands = table_prefix + "minhash_bands"
-    stored = _read_table(
-        spark, out_dir, t_bands,
-        atomic and os.path.isdir(_manifest_path(out_dir)),
-    )
-    if stored is None:
-        tdir = os.path.join(out_dir, f"{t_bands}.parquet")
-        stored = _read_if_exists(spark, tdir)
-        if stored is None:
-            return 0
-    fixed = (
-        stored.drop("key_bucket")
-        .withColumn(
-            "key_bucket", F.concat(F.lit("h"), F.substring("bucket", 1, 1))
-        )
-        .repartition("key_bucket")
-    )
-    n = fixed.count()
-    if atomic and os.path.isdir(_manifest_path(out_dir)):
-        rewrite_published(spark, out_dir, t_bands, fixed)
-    else:
-        import shutil
-        import uuid
-
-        tdir = os.path.join(out_dir, f"{t_bands}.parquet")
-        tmp = f"{tdir}.migrating-{uuid.uuid4().hex}"
-        fixed.write.mode("overwrite").partitionBy("key_bucket").parquet(tmp)
-        park = f"{tdir}.pre-migration-{uuid.uuid4().hex}"
-        os.rename(tdir, park)
-        os.rename(tmp, tdir)
-        shutil.rmtree(park, ignore_errors=True)
-    return n
 
 
 def _read_table(

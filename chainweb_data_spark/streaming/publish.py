@@ -8,8 +8,11 @@ window exists).  This module closes the window with a commit log:
 
     out_dir/
       <table>.parquet/<bucket>=<v>/part-*.parquet   data files, append-only
-      _manifest/v<N>.json    commit N: full snapshot (checkpoint) or an
-                             incremental {add, remove} delta against N-1
+      _manifest/v<N>.json    commit N: a checkpoint (v1 and every
+                             CHECKPOINT_EVERY-th version) or a delta
+                             {add, remove} against N-1
+      _manifest/ckpt-v<N>-*.parquet    a checkpoint's live-file snapshot
+      _manifest/delta-v<N>-*.parquet   a mega-delta's spilled file lists
       _manifest/CURRENT      discovery hint naming the newest commit file
 
 A batch stages ALL tables' new files first (files on disk but referenced by
@@ -31,14 +34,32 @@ probe only consults published rows (null-safe on PK components, like
 stages nothing at all, in which case NO commit is written (a version
 burned per replay would silently shrink the retention horizon).
 
+ONE on-disk format, stamped (Delta's protocol-version move): every commit
+JSON carries ``"format": LOG_FORMAT``, written by :func:`_link_commit`
+(the one commit point) and checked by :func:`_load_commit` (the one place
+commit JSON is parsed).  A commit with a missing or different stamp is
+refused with :class:`LogFormatError` naming the store and the version —
+rebuild the store; no reader for an older shape exists.  In this format:
+
+- every commit states its own delta: ``add`` / ``remove`` (+ the added
+  files' ``stats_add`` between checkpoints) inline, or — past
+  :data:`DELTA_SIDECAR_MIN_FILES` changed files — a
+  ``delta`` sidecar name plus per-table counts and added partition
+  directories in the JSON.  Only v1, which has no parent, may leave
+  it out: its delta is its whole snapshot;
+- every checkpoint commit names its ``ckpt`` sidecar and carries
+  ``n_files``, ``table_names``, ``n_files_by_table`` and the folded
+  ``pins`` set, so counts, table names and leases resolve from commit
+  metadata without opening a sidecar.
+
 Scale properties (the reasons a 100 TB table needs a log, not a listing):
 
 - **O(delta) commits.**  A commit writes only its added/removed file names;
   every ``CHECKPOINT_EVERY``-th commit also writes a full snapshot so a
-  reader replays at most ``CHECKPOINT_EVERY - 1`` tiny deltas.  The v5
-  manifest rewrote the entire O(live files) list on every batch — at
-  millions of files that rewrite IS the commit cost; here it is amortized
-  to O(delta + files/CHECKPOINT_EVERY).
+  reader replays at most ``CHECKPOINT_EVERY - 1`` tiny deltas.  Rewriting
+  the entire O(live files) list on every batch would make that rewrite
+  the commit cost at millions of files; here it is amortized to
+  O(delta + files/CHECKPOINT_EVERY).
 - **No directory listings.**  Readers get explicit file lists from the
   snapshot (``basePath`` preserves bucket-partition columns), so the
   object-store LIST that dominates partitioned-table reads at scale never
@@ -52,7 +73,7 @@ Scale properties (the reasons a 100 TB table needs a log, not a listing):
   ``version=`` — any retained commit resolves to its exact snapshot
   (``vacuum`` bounds how far back the data files themselves survive).
 
-Concurrent writers rebase with CONFLICT DETECTION (r9): a losing writer
+Concurrent writers rebase with CONFLICT DETECTION: a losing writer
 compares its staged files' partition directories with what the racers
 ADDED in between — overlapping tables re-run their PK anti-join against
 the fresh snapshot (duplicates a racer published are dropped; the stale
@@ -68,54 +89,50 @@ log — same protocol (stage files, commit one metadata delta, checkpoint,
 vacuum), engine-grade implementation; the log here keeps the repo
 dependency-free.
 
-Checkpoints are PARQUET (r9 — Delta's move, closing the former "known
-residual"): the per-checkpoint commit JSON stays O(1) bytes (version,
-op, pin fold, a sidecar reference and row count) while the O(live files)
-snapshot — file names and their per-file stats — lives in a zstd
-parquet sidecar next to the log.  The stats column is the bulk of
-checkpoint bytes and the part most readers never need, so consumers that
-want only file SETS (vacuum's live-set sweep, pin_version's
-re-readability probes) read the sidecar column-pruned via
+Checkpoints are PARQUET (Delta's move): the per-checkpoint commit JSON
+stays O(1) bytes (version, op, pin fold, a sidecar reference and counts)
+while the O(live files) snapshot — file names and their per-file stats —
+lives in a zstd parquet sidecar next to the log.  The stats column is the
+bulk of checkpoint bytes and the part most readers never need, so
+consumers that want only file SETS (vacuum's live-set sweep,
+pin_version's re-readability probes) read the sidecar column-pruned via
 :func:`_snapshot_files` — the stats bytes are never fetched.  The commit
 point is unchanged (sidecars are staged and fsynced BEFORE the
 ``os.link`` of the JSON, so a crash in between leaves an orphan sidecar
 that :func:`vacuum` reclaims by its embedded version, age-gated).
-Pre-r9 stores (checkpoints with inline ``tables``) read unchanged.
 
-Snapshot resolution is CLUSTER-SIDE on the scale path (r10, closing the
-former "known residual at extreme file counts"): :func:`snapshot_files_df`
-reads the checkpoint sidecar as a Spark DataFrame and ships only the
-O(delta) commits since it from the driver, so ``vacuum(spark=...)`` plans
-its orphan sweep as a distributed-listing anti-join (collecting only the
-orphans it deletes — Delta's vacuum shape) and ``pin_version(spark=...)``
-probes snapshot re-readability in executors (collecting at most one
-missing row).  ``read_published`` resolves PER TABLE through a filtered,
-column-pruned sidecar read — O(that table's files), never O(all live
-files), with stats bytes fetched only when a ``where`` needs them.  The
-remaining O(table files) driver artifact is the explicit path list handed
-to ``spark.read`` — the same place Delta keeps it (a scan's file index
-lives on the JVM driver by construction).
+Snapshot resolution is CLUSTER-SIDE on the scale path:
+:func:`snapshot_files_df` reads the checkpoint sidecar as a Spark
+DataFrame and ships only the O(delta) commits since it from the driver,
+so ``vacuum(spark=...)`` plans its orphan sweep as a distributed-listing
+anti-join (collecting only the orphans it deletes — Delta's vacuum shape)
+and ``pin_version(spark=...)`` probes snapshot re-readability in
+executors (collecting at most one missing row).  ``read_published``
+resolves PER TABLE through a filtered, column-pruned sidecar read —
+O(that table's files), never O(all live files), with stats bytes fetched
+only when a ``where`` needs them.  The remaining O(table files) driver
+artifact is the explicit path list handed to ``spark.read`` — the same
+place Delta keeps it (a scan's file index lives on the JVM driver by
+construction).
 
-Checkpoint WRITES are cluster-side too (r11, closing the last
-O(live files) driver path): past :data:`CLUSTER_PATH_MIN_FILES` a
-checkpoint's sidecar is DERIVED by Spark from the previous sidecar plus
-the O(delta) commit chain and written by a Spark job
-(:func:`_write_checkpoint_spark`) — the driver ships only the delta and
-links the O(1) commit JSON; row order and stats encoding match the
-driver builder byte-for-byte.  Every writer (publish, compact, z-order,
-expire, rewrite, pin) now commits DELTA-form through
-:func:`_commit_delta` — exactly the files it changed, no parent
-hydration or set-diff anywhere between checkpoints — and the
-maintenance ops resolve their inputs per-table.  The cluster paths
-AUTO-SELECT: ``vacuum``/``pin_version``/``unpin_version`` default to
-:data:`AUTO`, which picks the active SparkSession once the store's
-live-file count (free metadata: ``n_files`` in every checkpoint commit
-+ delta folds, :func:`_store_n_files`) crosses the threshold; explicit
+Checkpoint WRITES are cluster-side too: past
+:data:`CLUSTER_PATH_MIN_FILES` a checkpoint's sidecar is DERIVED by Spark
+from the previous sidecar plus the O(delta) commit chain and written by a
+Spark job (:func:`_write_checkpoint_spark`) — the driver ships only the
+delta and links the O(1) commit JSON; row order and stats encoding match
+the driver builder byte-for-byte.  Every writer (publish, compact,
+z-order, expire, rewrite, pin) commits DELTA-form through
+:func:`_commit_delta` — exactly the files it changed, no parent hydration
+or set-diff anywhere between checkpoints — and the maintenance ops
+resolve their inputs per-table.  The cluster paths AUTO-SELECT:
+``vacuum``/``pin_version``/``unpin_version`` default to :data:`AUTO`,
+which picks the active SparkSession once the store's live-file count
+(free metadata, :func:`_store_n_files`) crosses the threshold; explicit
 ``spark=None`` keeps the dependency-free driver path, fine to ~10^6
 files.  The 1M/4M-file sweeps comparing all paths are
 ``scripts/txlog_rehearsal.py`` rows.
 
-The STORAGE SEAM (r12 — Delta's LogStore move): every
+The STORAGE SEAM (Delta's LogStore move): every
 durability/atomicity-bearing call on the LOG surface — the
 put-if-absent commit link, the CURRENT hint, sidecar writes/reads,
 orphan sweeps, staging reclamation, and the executor probe/walk
@@ -156,6 +173,10 @@ from .logstore import InMemoryLogStore, PosixLogStore  # noqa: F401
 LOG_STORE = PosixLogStore()
 
 _MANIFEST_DIR = "_manifest"
+
+#: the on-disk log format every commit JSON is stamped with; a commit
+#: carrying any other stamp (or none) is refused, never read
+LOG_FORMAT = 1
 
 #: every Nth commit is written as a full snapshot; readers replay at most
 #: N-1 incremental deltas on top of the nearest checkpoint at or below the
@@ -246,6 +267,12 @@ def _warn_executor_blind(op: str, out_dir: str) -> None:
     )
 
 
+class LogFormatError(RuntimeError):
+    """A commit in the store was not written in :data:`LOG_FORMAT` — an
+    older or newer writer's log.  There is no reader for other formats:
+    rebuild the store."""
+
+
 class StorageVisibilityError(RuntimeError):
     """The cluster-side path found files the DRIVER can see but the
     executors' distributed walk cannot — ``out_dir`` is not on shared
@@ -281,11 +308,18 @@ def _commit_name(version: int) -> str:
 
 
 def _load_commit(out_dir: str, version: int) -> dict:
-    return json.loads(
+    commit = json.loads(
         LOG_STORE.read_bytes(
             os.path.join(_manifest_path(out_dir), _commit_name(version))
         )
     )
+    if commit.get("format") != LOG_FORMAT:
+        raise LogFormatError(
+            f"txlog store {out_dir!r}: commit v{version} has format "
+            f"{commit.get('format')!r}, this code reads only format "
+            f"{LOG_FORMAT}; rebuild the store"
+        )
+    return commit
 
 
 #: delta commits whose changed-file count reaches this spill their
@@ -424,10 +458,8 @@ def _hydrate_delta(
         else:
             remove.setdefault(tname, []).append(rel)
     out = dict(commit)
-    # "add" is set even when empty: its PRESENCE tells _added_between
-    # the commit states its own delta (no snapshot diff needed) — the
-    # same sentinel inline checkpoint commits carry
-    out["add"] = add
+    if add:
+        out["add"] = add
     if remove:
         out["remove"] = remove
     if stats_add:
@@ -549,14 +581,6 @@ def _table_files(
                 out_dir, commit, table, with_stats
             )
             break
-        if "tables" in commit:
-            files = list(commit["tables"].get(table, []))
-            stats = (
-                dict(commit.get("stats", {}).get(table, {}))
-                if with_stats
-                else {}
-            )
-            break
         deltas.append(commit)
         v = commit.get("parent", v - 1)
         if v < 1:
@@ -618,60 +642,36 @@ def _latest_version(out_dir: str) -> int:
 
 def _store_n_files(out_dir: str, version: int) -> int | None:
     """The snapshot's live-file COUNT at ``version`` from commit metadata
-    alone — O(deltas since the last checkpoint), never a file-list scan:
-    checkpoint commits carry ``n_files`` in their O(1) JSON, and each
-    delta states exactly how many files it added/removed.  Pre-r9 inline
-    checkpoints pay one JSON parse (those stores are driver-bounded by
-    construction).  ``None`` when nothing is committed."""
+    alone (:func:`_store_table_counts` summed) — never a file-list scan.
+    ``None`` when nothing is committed."""
     if version < 1:
         return None
-    n = 0
-    v = version
-    while v >= 1:
-        c = _load_commit(out_dir, v)
-        if "n_files" in c:
-            return int(c["n_files"]) + n
-        if "tables" in c:  # inline / legacy checkpoint
-            return sum(len(fs) for fs in c["tables"].values()) + n
-        if "delta" in c:  # spilled mega-delta: counts ride in the JSON
-            n += sum(c.get("n_add_by_table", {}).values())
-            n -= sum(c.get("n_remove_by_table", {}).values())
-        else:
-            n += sum(len(fs) for fs in c.get("add", {}).values())
-            n -= sum(len(fs) for fs in c.get("remove", {}).values())
-        v = c.get("parent", v - 1)
-    raise RuntimeError(
-        f"commit chain for version {version} in {out_dir} has no "
-        "checkpoint ancestor — log is corrupt"
-    )
+    return sum(_store_table_counts(out_dir, version).values())
 
 
-def _store_table_counts(out_dir: str, version: int) -> dict[str, int] | None:
+def _store_table_counts(out_dir: str, version: int) -> dict[str, int]:
     """Per-table live-file counts at ``version`` from commit metadata
-    alone — the per-table refinement of :func:`_store_n_files` (r12):
-    checkpoint commits carry ``n_files_by_table`` and each delta states
-    exactly what it added/removed per table, so the fold is O(deltas ×
-    tables) with no file-list scan.  ``None`` when the checkpoint
-    ancestor predates the field (pre-r12 sidecar) — callers then fall
-    back to deriving names from the sidecar itself."""
+    alone: checkpoint commits carry ``n_files_by_table`` and each delta
+    states exactly what it added/removed per table, so the fold is
+    O(deltas × tables) with no file-list scan.  The keys are every table
+    name the snapshot references — a table a delta emptied stays with
+    count 0, so vacuum still visits its directory."""
     if version < 1:
         return {}
     deltas: list[dict] = []
     v = version
     while True:
         c = _load_commit(out_dir, v)
-        if "n_files_by_table" in c:
+        if "ckpt" in c:
             counts = {t: int(n) for t, n in c["n_files_by_table"].items()}
             break
-        if "tables" in c:  # inline / legacy checkpoint: exact and tiny
-            counts = {t: len(fs) for t, fs in c["tables"].items()}
-            break
-        if "ckpt" in c:  # pre-r12 sidecar checkpoint: counts not carried
-            return None
         deltas.append(c)
         v = c.get("parent", v - 1)
         if v < 1:
-            return None
+            raise RuntimeError(
+                f"commit chain for version {version} in {out_dir} has no "
+                "checkpoint ancestor — log is corrupt"
+            )
     for c in reversed(deltas):
         if "delta" in c:  # spilled mega-delta: counts ride in the JSON
             for t, n in c.get("n_add_by_table", {}).items():
@@ -720,11 +720,10 @@ def _cache_put(key: tuple, snap: dict) -> None:
 def _walk_snapshot(
     out_dir: str, version: int, with_stats: bool
 ) -> tuple[dict, dict]:
-    """The shared resolve walk: back to the nearest full-form commit
-    (parquet-checkpoint sidecar, inline checkpoint, pre-log legacy
-    manifest, or a cached resolved ancestor), then replay the deltas
-    forward.  ``with_stats=False`` column-prunes checkpoint sidecars and
-    skips ``stats_add`` replay — the stats bytes are never fetched.
+    """The shared resolve walk: back to the nearest checkpoint sidecar
+    (or a cached resolved ancestor), then replay the deltas forward.
+    ``with_stats=False`` column-prunes checkpoint sidecars and skips
+    ``stats_add`` replay — the stats bytes are never fetched.
     Returns un-normalized ``(tables, stats)``."""
     root = os.path.abspath(out_dir)
     deltas: list[dict] = []
@@ -740,17 +739,9 @@ def _walk_snapshot(
             )
             break
         commit = _load_commit(out_dir, v)
-        if "ckpt" in commit:  # r9 parquet-checkpoint form
+        if "ckpt" in commit:
             base_tables, base_stats = _read_checkpoint_sidecar(
                 out_dir, commit, with_stats=with_stats
-            )
-            break
-        if "tables" in commit:  # inline snapshot / legacy manifest form
-            base_tables = {t: list(fs) for t, fs in commit["tables"].items()}
-            base_stats = (
-                {t: dict(s) for t, s in commit.get("stats", {}).items()}
-                if with_stats
-                else {}
             )
             break
         deltas.append(commit)
@@ -820,15 +811,11 @@ def snapshot_files_df(
     spark: SparkSession, out_dir: str, version: int
 ) -> DataFrame:
     """The snapshot's live file SET at ``version`` as a DataFrame of
-    ``(table string, file string)`` — the CLUSTER-SIDE resolve (r10,
-    closing the module's former driver-dict residual): the checkpoint
-    sidecar is scanned by Spark where it lies, and only the O(delta)
-    commits since it ship from the driver (as a broadcast anti-join set
-    plus a union), so resolution never materializes O(live files) Python
-    state no matter how many files are live.  Pre-r9 inline checkpoints
-    fall back to hydrating through the driver — those stores carried
-    their whole snapshot in one JSON and are driver-bounded by
-    construction; their next checkpoint lands as a sidecar."""
+    ``(table string, file string)`` — the CLUSTER-SIDE resolve: the
+    checkpoint sidecar is scanned by Spark where it lies, and only the
+    O(delta) commits since it ship from the driver (as a broadcast
+    anti-join set plus a union), so resolution never materializes
+    O(live files) Python state no matter how many files are live."""
     return _snapshot_df(spark, out_dir, version, with_stats=False)
 
 
@@ -875,28 +862,6 @@ def _snapshot_df(
             if base_cache is not None:
                 base = base.persist()
                 base_cache[v] = base
-            break
-        if "tables" in commit:  # inline / legacy: already driver-sized
-            st = commit.get("stats", {})
-            if with_stats:
-                rows = [
-                    (
-                        t,
-                        f,
-                        json.dumps(
-                            st[t][f], separators=(",", ":")
-                        )
-                        if st.get(t, {}).get(f)
-                        else None,
-                    )
-                    for t, fs in commit["tables"].items()
-                    for f in fs
-                ]
-            else:
-                rows = [
-                    (t, f) for t, fs in commit["tables"].items() for f in fs
-                ]
-            base = spark.createDataFrame(rows, schema)
             break
         deltas.append(commit)
         v = commit.get("parent", v - 1)
@@ -1088,6 +1053,21 @@ def _write_checkpoint_spark(
     for p in parts:
         src = os.path.join(staging, p)
         n_files += pq.ParquetFile(src).metadata.num_rows
+    # table NAMES + per-table counts: folded from free commit metadata
+    # (parent checkpoint's n_files_by_table + the delta chain + this
+    # commit's own add/remove) — no extra Spark job, no driver
+    # hydration — and checked against the footer row count
+    counts = _store_table_counts(out_dir, version - 1)
+    for t, fs in add.items():
+        counts[t] = counts.get(t, 0) + len(fs)
+    for t, fs in remove.items():
+        counts[t] = counts.get(t, 0) - len(fs)
+    counts = {t: c for t, c in counts.items() if c > 0}
+    try:
+        _check_live_fold(out_dir, version, sum(counts.values()), n_files)
+    except RuntimeError:
+        store.rmtree(staging)
+        raise
     mdir = _manifest_path(out_dir)
     store.makedirs(mdir)
     name = f"ckpt-v{version}-{uuid.uuid4().hex[:12]}.parquet"
@@ -1109,47 +1089,6 @@ def _write_checkpoint_spark(
             )
         store.finalize_dir(staging, os.path.join(mdir, name))
 
-    path = os.path.join(mdir, name)
-    # table NAMES + per-table counts: folded from free commit metadata
-    # (parent checkpoint's n_files_by_table + the delta chain + this
-    # commit's own add/remove) — no extra Spark job, no driver
-    # hydration.  Cross-checked against the written sidecar's footer
-    # row count; a mismatch (protocol violation: a remove naming a
-    # non-live file) or a pre-r12 parent falls back to ONE aggregate
-    # job over the sidecar (a pyarrow unique() would materialize the
-    # whole O(live files) column on the driver, the exact state this
-    # builder exists to avoid).
-    counts = _store_table_counts(out_dir, version - 1)
-    if counts is not None:
-        for t, fs in add.items():
-            counts[t] = counts.get(t, 0) + len(fs)
-        for t, fs in remove.items():
-            counts[t] = counts.get(t, 0) - len(fs)
-        counts = {t: c for t, c in counts.items() if c > 0}
-        if sum(counts.values()) != n_files:
-            import warnings
-
-            warnings.warn(
-                f"checkpoint v{version}: per-table metadata fold "
-                f"({sum(counts.values())} files) disagrees with the "
-                f"written sidecar ({n_files}) — a delta commit removed "
-                "a file that was not live; deriving table counts from "
-                "the sidecar instead",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            counts = None
-    if counts is None:
-        counts = {
-            r["table"]: int(r["n"])
-            for r in spark.read.schema(
-                "table string, file string, stats string"
-            )
-            .parquet(path)
-            .groupBy("table")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
     table_names = sorted(counts)
     manifest = {
         "version": version,
@@ -1168,6 +1107,21 @@ def _write_checkpoint_spark(
     if pin is not None:
         manifest["pin"] = pin
     _write_manifest(out_dir, manifest)
+
+
+def _check_live_fold(
+    out_dir: str, version: int, folded: int, n_files: int
+) -> None:
+    """The live-set invariant both checkpoint builders enforce: the
+    file count folded from commit metadata equals the count actually
+    written.  They differ only when a delta removed a file that was not
+    live — a broken commit, refused before the checkpoint lands."""
+    if folded != n_files:
+        raise RuntimeError(
+            f"checkpoint v{version} of {out_dir}: commit metadata folds to "
+            f"{folded} live files but the snapshot holds {n_files} — a "
+            "delta commit removed a file that was not live"
+        )
 
 
 def _executor_visible(spark: SparkSession, path: str) -> bool:
@@ -1315,20 +1269,15 @@ def _attach_delta(
     commit: dict,
     mdir: str,
     version: int,
-    manifest: dict,
-    keep_empty_add: bool,
+    add: dict[str, list],
+    remove: dict[str, list],
+    stats_add: dict[str, dict],
 ) -> None:
     """The ONE spill-or-inline decision (delta commits and checkpoint
     commits both funnel here, so the threshold semantics cannot
     diverge): inline ``add``/``remove``/``stats_add`` below
     :data:`DELTA_SIDECAR_MIN_FILES` changed files, a spilled
-    ``delta-v*`` sidecar + O(#tables) count fields past it.
-    ``keep_empty_add=True`` (checkpoint commits) preserves an EMPTY
-    ``add`` key — its presence is the sentinel telling
-    :func:`_added_between` the commit states its own delta."""
-    add = manifest.get("add", {})
-    remove = manifest.get("remove", {})
-    stats_add = manifest.get("stats_add", {})
+    ``delta-v*`` sidecar + O(#tables) count fields past it."""
     n_changed = sum(len(fs) for fs in add.values()) + sum(
         len(fs) for fs in remove.values()
     )
@@ -1359,7 +1308,7 @@ def _attach_delta(
                 t: len(fs) for t, fs in sorted(remove.items())
             }
         return
-    if add or (keep_empty_add and "add" in manifest):
+    if add:
         commit["add"] = add
     if remove:
         commit["remove"] = remove
@@ -1367,29 +1316,65 @@ def _attach_delta(
         commit["stats_add"] = stats_add
 
 
+def _lower_full_form(
+    out_dir: str, mdir: str, manifest: dict, is_ckpt_version: bool
+) -> dict:
+    """Turn a FULL-form manifest (``tables`` [+ ``stats``], the target
+    snapshot) into the delta or pre-built checkpoint form.  Its delta is
+    the caller's ``add``/``remove`` when stated (:func:`_commit_delta`'s
+    driver checkpoint), else the diff against the parent snapshot — v1
+    has no parent, so its delta is its whole snapshot and none is
+    written.  On checkpoint versions the O(live files) snapshot goes to
+    a parquet sidecar, so the commit JSON stays O(1) bytes."""
+    version = manifest["version"]
+    tables = {t: sorted(fs) for t, fs in manifest["tables"].items() if fs}
+    stats = {t: s for t, s in manifest.get("stats", {}).items() if s}
+    out = {
+        k: manifest[k]
+        for k in ("version", "op", "pin", "add", "remove")
+        if k in manifest
+    }
+    if version > 1 and "add" not in out and "remove" not in out:
+        base = _resolve(out_dir, version - 1)["tables"]
+        for t in sorted(set(tables) | set(base)):
+            old, new = set(base.get(t, [])), set(tables.get(t, []))
+            if new - old:
+                out.setdefault("add", {})[t] = sorted(new - old)
+            if old - new:
+                out.setdefault("remove", {})[t] = sorted(old - new)
+        out["stats_add"] = stats  # narrowed to the added files on commit
+    if is_ckpt_version:
+        out["ckpt"], out["n_files"] = _write_checkpoint_sidecar(
+            mdir, version, tables, stats
+        )
+        # table names and per-table counts are O(#tables): consumers
+        # (vacuum's candidate tables, the next cluster-side checkpoint)
+        # learn them without scanning the O(live files) sidecar
+        out["table_names"] = sorted(tables)
+        out["n_files_by_table"] = {t: len(fs) for t, fs in tables.items()}
+    return out
+
+
 def _write_manifest(out_dir: str, manifest: dict) -> None:
     """Commit ``manifest`` as version N — the single commit choke point.
 
     Three accepted shapes:
 
-    - FULL form (``tables`` [+ ``stats``]): the target snapshot.  The
-      durable encoding is chosen here — checkpoints (v1 and every
-      ``CHECKPOINT_EVERY``-th version) store the snapshot verbatim (the
-      parquet sidecar); other versions store only the computed delta
-      against N-1.
-    - DELTA form (``add`` and/or ``remove`` [+ ``stats_add``], no
-      ``tables`` — the r10/r11 hot path, :func:`_commit_delta`): the
-      caller states exactly which files it added/removed and the record
-      is written directly, O(changed files) with NO parent-snapshot
-      hydration or set-diff.  ``stats_add`` is filtered to the files in
-      ``add`` (the protocol invariant the cluster-side resolves rely
-      on).  Refused on checkpoint versions (those owe readers a full
-      snapshot).
+    - DELTA form (``add`` and/or ``remove`` [+ ``stats_add``] — the hot
+      path, :func:`_commit_delta`): the caller states exactly which
+      files it added/removed and the record is written directly,
+      O(changed files) with NO parent-snapshot hydration or set-diff.
+      ``stats_add`` is narrowed to the files in ``add`` (the protocol
+      invariant the cluster-side resolves rely on).  Refused on
+      checkpoint versions (those owe readers a full snapshot).
     - PRE-BUILT CHECKPOINT form (``ckpt`` + ``n_files`` +
-      ``table_names``, no ``tables`` — :func:`_write_checkpoint_spark`,
-      r11): the sidecar parquet was already staged and made durable by a
-      Spark job; only the O(1) commit JSON (with the pin fold) is
-      written here.  Refused OFF checkpoint versions.
+      ``table_names`` + ``n_files_by_table`` [+ ``add``/``remove``] —
+      :func:`_write_checkpoint_spark`): the sidecar parquet was already
+      staged and made durable by a Spark job; only the O(1) commit JSON
+      (with the pin fold) is written here.  Refused OFF checkpoint
+      versions (v1 and every ``CHECKPOINT_EVERY``-th).
+    - FULL form (``tables`` [+ ``stats``]): the target snapshot, lowered
+      to one of the two above by :func:`_lower_full_form`.
 
     Either way the commit point is :func:`_link_commit`'s put-if-absent
     ``os.link`` — a concurrent committer of the same version raises
@@ -1397,59 +1382,32 @@ def _write_manifest(out_dir: str, manifest: dict) -> None:
     mdir = _manifest_path(out_dir)
     LOG_STORE.makedirs(mdir)
     version = manifest["version"]
-    op = manifest.get("op", "write")
     is_ckpt_version = version == 1 or version % CHECKPOINT_EVERY == 0
-    if "ckpt" in manifest and "tables" not in manifest:
-        if not is_ckpt_version:
-            raise ValueError(
-                f"pre-built checkpoint commit for non-checkpoint version "
-                f"{version} — deltas between checkpoints use the delta form"
-            )
-        commit = {
-            "version": version,
-            "ts": round(time.time(), 3),
-            "op": op,
-            "ckpt": manifest["ckpt"],
-            "n_files": int(manifest["n_files"]),
-            "table_names": sorted(manifest["table_names"]),
-        }
-        if "n_files_by_table" in manifest:  # r12: per-table fold seed
-            commit["n_files_by_table"] = {
-                t: int(n)
-                for t, n in sorted(manifest["n_files_by_table"].items())
-            }
-        # the checkpoint's own delta, when the writer knows it: presence
-        # (even empty) tells _added_between no snapshot diff is needed;
-        # a mega-delta landing ON the boundary spills (r12)
-        _attach_delta(commit, mdir, version, manifest, keep_empty_add=True)
-        if "pin" in manifest:
-            commit["pin"] = manifest["pin"]
-        commit["pins"] = _fold_checkpoint_pins(
-            out_dir, version, op, manifest.get("pin")
+    if "tables" in manifest:
+        manifest = _lower_full_form(out_dir, mdir, manifest, is_ckpt_version)
+    if ("ckpt" in manifest) != is_ckpt_version:
+        form = "delta-form" if is_ckpt_version else "pre-built checkpoint"
+        raise ValueError(
+            f"{form} commit for {'' if is_ckpt_version else 'non-'}"
+            f"checkpoint version {version} — checkpoints carry the full "
+            "snapshot, the versions between them the delta form"
         )
-        _link_commit(mdir, version, commit)
-        return
-    if "tables" not in manifest:
-        if is_ckpt_version:
-            raise ValueError(
-                f"delta-form commit for checkpoint version {version} — "
-                "checkpoints must carry the full snapshot (_commit_delta "
-                "routes them through the full or pre-built form)"
-            )
-        commit = {
-            "version": version,
-            "parent": version - 1,
-            "ts": round(time.time(), 3),
-            "op": op,
+    op = manifest.get("op", "write")
+    commit = {"version": version, "ts": round(time.time(), 3), "op": op}
+    add = {t: sorted(fs) for t, fs in manifest.get("add", {}).items() if fs}
+    remove = {
+        t: sorted(fs) for t, fs in manifest.get("remove", {}).items() if fs
+    }
+    stats_add: dict[str, dict] = {}
+    if is_ckpt_version:
+        commit["ckpt"] = manifest["ckpt"]
+        commit["n_files"] = int(manifest["n_files"])
+        commit["table_names"] = sorted(manifest["table_names"])
+        commit["n_files_by_table"] = {
+            t: int(n) for t, n in sorted(manifest["n_files_by_table"].items())
         }
-        add = {
-            t: sorted(fs) for t, fs in manifest.get("add", {}).items() if fs
-        }
-        remove = {
-            t: sorted(fs)
-            for t, fs in manifest.get("remove", {}).items()
-            if fs
-        }
+    else:
+        commit["parent"] = version - 1
         # hoist the per-table membership sets: rebuilding set(add[t])
         # inside the inner comprehension is O(n^2) for an n-file table,
         # which bites mega-rewrites (whole-table delta commits)
@@ -1460,108 +1418,33 @@ def _write_manifest(out_dir: str, manifest: dict) -> None:
             if per and t in added_sets
         }
         stats_add = {t: per for t, per in stats_add.items() if per}
-        # mega-deltas (format migration, whole-table rewrite) spill the
-        # file lists to a parquet sidecar and keep the commit JSON O(1)
-        # bytes + O(#tables) counts — every resolve between checkpoints
-        # re-parses this JSON, so an inlined million-file list would tax
-        # the whole store until the next checkpoint.  The sidecar is
-        # durable BEFORE the commit link; a race loser's spill is a
-        # vacuumable orphan.  Same decision point as checkpoint commits.
-        _attach_delta(
-            commit, mdir, version,
-            {"add": add, "remove": remove, "stats_add": stats_add},
-            keep_empty_add=False,
-        )
-        if "pin" in manifest:  # pin/unpin ops change no files — O(1) commit
-            commit["pin"] = manifest["pin"]
-        _link_commit(mdir, version, commit)
-        return
-    tables = {t: sorted(fs) for t, fs in manifest["tables"].items() if fs}
-    stats = {t: s for t, s in manifest.get("stats", {}).items() if s}
-
+    # mega-deltas (whole-table rewrite) spill the file lists to a parquet
+    # sidecar and keep the commit JSON O(1) bytes + O(#tables) counts —
+    # every resolve between checkpoints re-parses this JSON.  The sidecar
+    # is durable BEFORE the commit link; a race loser's spill is a
+    # vacuumable orphan.
+    _attach_delta(commit, mdir, version, add, remove, stats_add)
+    if "pin" in manifest:  # pin/unpin ops change no files
+        commit["pin"] = manifest["pin"]
     if is_ckpt_version:
-        # the O(live files) payload goes to a parquet sidecar; the commit
-        # JSON stays O(1) bytes no matter how many files are live
-        ckpt_name, n_files = _write_checkpoint_sidecar(
-            mdir, version, tables, stats
-        )
-        commit = {
-            "version": version,
-            "ts": round(time.time(), 3),
-            "op": op,
-            "ckpt": ckpt_name,
-            "n_files": n_files,
-            # table NAMES are O(dozens) — carrying them here lets
-            # consumers (vacuum's candidate-table seeding) learn the
-            # snapshot's tables without scanning the O(live files) sidecar
-            "table_names": sorted(tables),
-            # per-table counts (r12): lets the NEXT cluster-side
-            # checkpoint derive its table_names/counts by folding delta
-            # metadata instead of running a Spark distinct over the
-            # sidecar — O(#tables) JSON bytes buys back one job/ckpt
-            "n_files_by_table": {
-                t: len(fs) for t, fs in sorted(tables.items())
-            },
-        }
-        # delta passthrough (see the pre-built branch): _commit_delta's
-        # driver checkpoint path states what it changed so race-window
-        # conflict detection never diffs full snapshots; mega-deltas
-        # landing on the boundary spill (r12)
-        _attach_delta(commit, mdir, version, manifest, keep_empty_add=True)
-        if "pin" in manifest:
-            commit["pin"] = manifest["pin"]
         commit["pins"] = _fold_checkpoint_pins(
             out_dir, version, op, manifest.get("pin")
         )
-    else:
-        base = _resolve(out_dir, version - 1)
-        add: dict[str, list[str]] = {}
-        remove: dict[str, list[str]] = {}
-        stats_add: dict[str, dict] = {}
-        names = set(tables) | set(base["tables"])
-        for t in sorted(names):
-            old = set(base["tables"].get(t, []))
-            new = set(tables.get(t, []))
-            if new - old:
-                add[t] = sorted(new - old)
-                per_file = {
-                    rel: stats.get(t, {})[rel]
-                    for rel in add[t]
-                    if rel in stats.get(t, {})
-                }
-                if per_file:
-                    stats_add[t] = per_file
-            if old - new:
-                remove[t] = sorted(old - new)
-        commit = {
-            "version": version,
-            "parent": version - 1,
-            "ts": round(time.time(), 3),
-            "op": op,
-        }
-        # the legacy full-form route spills past the threshold too — a
-        # whole-table rewrite handed in as a target snapshot must not
-        # re-create the multi-MB inline JSON the spill exists to prevent
-        _attach_delta(
-            commit, mdir, version,
-            {"add": add, "remove": remove, "stats_add": stats_add},
-            keep_empty_add=False,
-        )
-        if "pin" in manifest:
-            commit["pin"] = manifest["pin"]
-
     _link_commit(mdir, version, commit)
 
 
 def _link_commit(mdir: str, version: int, commit: dict) -> None:
-    """Durably publish one commit record through the storage seam:
-    ``put_if_absent`` of ``v<N>.json`` (THE commit point — POSIX: fsync'd
+    """Durably publish one commit record, stamped with
+    :data:`LOG_FORMAT`, through the storage seam: ``put_if_absent`` of
+    ``v<N>.json`` (THE commit point — POSIX: fsync'd
     temp + ``os.link``; object stores: conditional PUT; a concurrent
     committer of the same version raises :class:`ConcurrentWriteError`
     instead of silently clobbering), then the CURRENT discovery hint via
     ``write_atomic``."""
     name = _commit_name(version)
-    data = json.dumps(commit, separators=(",", ":")).encode()
+    data = json.dumps(
+        {"format": LOG_FORMAT, **commit}, separators=(",", ":")
+    ).encode()
     try:
         LOG_STORE.put_if_absent(os.path.join(mdir, name), data)
     except FileExistsError:
@@ -1621,19 +1504,16 @@ def _commit_delta(
     writers fail loudly and rebase exactly as before; all forms funnel
     through ``_write_manifest``, the single injectable choke point."""
     if version == 1 or version % CHECKPOINT_EVERY == 0:
-        parent_n = (
-            _store_n_files(out_dir, version - 1) if version > 1 else None
-        )
+        parent_n = _store_n_files(out_dir, version - 1) or 0
+        n_add = sum(len(fs) for fs in add.values())
         if (
             spark is not None
             and version > 1
-            and (parent_n or 0) >= CLUSTER_PATH_MIN_FILES
+            and parent_n >= CLUSTER_PATH_MIN_FILES
         ):
             _write_checkpoint_spark(
                 spark, out_dir, version, add, remove, stats_add, op,
-                pin=pin,
-                est_rows=(parent_n or 0)
-                + sum(len(fs) for fs in add.values()),
+                pin=pin, est_rows=parent_n + n_add,
             )
             return
         base = (
@@ -1654,6 +1534,12 @@ def _commit_delta(
         for t, per in stats_add.items():
             if per:
                 stats.setdefault(t, {}).update(per)
+        _check_live_fold(
+            out_dir,
+            version,
+            parent_n + n_add - sum(len(fs) for fs in remove.values()),
+            sum(len(fs) for fs in tables.values()),
+        )
         manifest = {
             "version": version,
             "tables": tables,
@@ -1682,47 +1568,26 @@ def _commit_delta(
 
 def history(out_dir: str) -> list[dict]:
     """The commit log, oldest first: ``[{version, op, ts, kind, added,
-    removed}]`` — the DESCRIBE HISTORY analog."""
+    removed}]`` — the DESCRIBE HISTORY analog.  Counts come from each
+    commit's own delta (a checkpoint sidecar is never opened); v1 has no
+    parent, so its whole snapshot is what it added."""
     out: list[dict] = []
     for v in range(1, _latest_version(out_dir) + 1):
         c = _load_commit(out_dir, v)
-        if "ckpt" in c:
-            # parquet checkpoint: counts ride in the commit JSON, so
-            # history never opens the sidecar.  r11 checkpoints carry
-            # their own delta — report the TRUE change (a compact
-            # landing on a boundary removes files; n_files would show a
-            # phantom million-file write); pre-r11 checkpoints fall
-            # back to the snapshot size, the only number they recorded
-            kind = "checkpoint"
-            if "delta" in c:  # spilled mega-delta on a boundary (r12)
-                added = sum(c.get("n_add_by_table", {}).values())
-                removed = sum(c.get("n_remove_by_table", {}).values())
-            elif "add" in c or "remove" in c:
-                added = sum(len(fs) for fs in c.get("add", {}).values())
-                removed = sum(
-                    len(fs) for fs in c.get("remove", {}).values()
-                )
-            else:
-                added = int(c["n_files"])
-                removed = 0
-        elif "tables" in c:
-            kind = "checkpoint" if "ts" in c else "legacy"
-            added = sum(len(fs) for fs in c["tables"].values())
-            removed = 0
-        elif "delta" in c:  # spilled mega-delta (r12): counts in JSON
-            kind = "delta"
+        if v == 1:
+            added, removed = int(c["n_files"]), 0
+        elif "delta" in c:  # spilled mega-delta: counts in the JSON
             added = sum(c.get("n_add_by_table", {}).values())
             removed = sum(c.get("n_remove_by_table", {}).values())
         else:
-            kind = "delta"
             added = sum(len(fs) for fs in c.get("add", {}).values())
             removed = sum(len(fs) for fs in c.get("remove", {}).values())
         out.append(
             {
                 "version": v,
-                "op": c.get("op", "write"),
-                "ts": c.get("ts"),
-                "kind": kind,
+                "op": c["op"],
+                "ts": c["ts"],
+                "kind": "checkpoint" if "ckpt" in c else "delta",
                 "added": added,
                 "removed": removed,
             }
@@ -1732,24 +1597,23 @@ def history(out_dir: str) -> list[dict]:
 
 def _pins_at(out_dir: str, version: int) -> dict[int, str | None]:
     """The active pin set AS OF ``version``: walk back to the nearest
-    commit carrying a folded ``pins`` snapshot (checkpoints write one —
-    the same amortization as table state, so this is O(commits since
-    last checkpoint), not O(total versions)), then replay the pin/unpin
-    ops forward.  Pre-fold stores (checkpoints without the key) fall
-    through to a full replay from v1 — correct, just unamortized until
-    their next checkpoint lands."""
+    checkpoint — every checkpoint carries the folded ``pins`` snapshot
+    (the same amortization as table state, so this is O(commits since
+    last checkpoint), not O(total versions)) — then replay the pin/unpin
+    ops forward."""
+    if version < 1:
+        return {}
     ops: list[dict] = []
-    base: dict[int, str | None] = {}
     v = version
-    while v >= 1:
+    while True:
         c = _load_commit(out_dir, v)
         if "pins" in c:
             base = {int(k): n for k, n in c["pins"].items()}
             break
         p = c.get("pin")
-        if p and c.get("op") in ("pin", "unpin"):
+        if p and c["op"] in ("pin", "unpin"):
             ops.append({"op": c["op"], **p})
-        v = c.get("parent", v - 1) if "tables" not in c else v - 1
+        v = c["parent"]
     for p in reversed(ops):
         if p["op"] == "pin":
             base[int(p["version"])] = p.get("name")
@@ -2284,45 +2148,39 @@ def _stage_table(
 
 def _added_between(out_dir: str, old_v: int, new_v: int) -> dict[str, list]:
     """Files ADDED by commits ``old_v+1 .. new_v`` — what the racing
-    writer(s) published while our batch was staging.  Delta commits carry
-    the answer verbatim, and r11 checkpoints carry their OWN delta in the
-    commit JSON (``add``/``remove`` beside ``ckpt``), so a checkpoint
-    landing in the race window costs O(delta) too; only pre-r11
-    full-form commits fall back to diffing two resolved snapshots.
-    Conflict detection itself uses the cheaper
-    :func:`_added_dirs_between` (r12 — spilled mega-deltas answer from
-    JSON metadata); this file-level fold remains for introspection and
-    as the reference semantics the dirs fold is tested against."""
+    writer(s) published while our batch was staging, folded from each
+    commit's own delta (checkpoints carry theirs too, so a checkpoint
+    landing in the race window costs O(delta) as well).  Conflict
+    detection itself uses the cheaper :func:`_added_dirs_between`
+    (spilled mega-deltas answer from JSON metadata); this file-level
+    fold remains for introspection and as the reference semantics the
+    dirs fold is tested against."""
     added: dict[str, list] = {}
     for v in range(old_v + 1, new_v + 1):
-        c = _hydrate_delta(
-            out_dir, _load_commit(out_dir, v), with_stats=False
-        )
-        if "add" in c or ("tables" not in c and "ckpt" not in c):
-            per = c.get("add", {})
-        else:  # full form: diff against the previous snapshot
-            prev = _snapshot_files(out_dir, v - 1)
-            cur = _snapshot_files(out_dir, v)
-            per = {
-                t: sorted(set(fs) - set(prev.get(t, [])))
-                for t, fs in cur.items()
-            }
+        per = _commit_adds(out_dir, v, _load_commit(out_dir, v))
         for t, rels in per.items():
             if rels:
                 added.setdefault(t, []).extend(rels)
     return added
 
 
+def _commit_adds(out_dir: str, v: int, commit: dict) -> dict[str, list]:
+    """The files commit ``v`` added, per table: its own delta, hydrated
+    from a spill sidecar when it has one — or, for v1, which has no
+    parent, its whole snapshot."""
+    if v == 1:
+        return _snapshot_files(out_dir, 1)
+    return _hydrate_delta(out_dir, commit, with_stats=False).get("add", {})
+
+
 def _added_dirs_between(
     out_dir: str, old_v: int, new_v: int
 ) -> dict[str, set | None]:
     """The partition DIRECTORIES of files added by commits
-    ``old_v+1 .. new_v`` — all conflict detection needs (r12).  Spilled
+    ``old_v+1 .. new_v`` — all conflict detection needs.  Spilled
     mega-deltas answer from their ``add_dirs_by_table`` JSON field
     without opening the sidecar; a ``None`` value is the over-cap
-    wildcard (treat as conflicting with anything on that table).
-    Pre-r12 spills without the field hydrate once, like
-    :func:`_added_between`."""
+    wildcard (treat as conflicting with anything on that table)."""
     dirs: dict[str, set | None] = {}
 
     def _merge(t: str, ds) -> None:
@@ -2335,21 +2193,11 @@ def _added_dirs_between(
 
     for v in range(old_v + 1, new_v + 1):
         c = _load_commit(out_dir, v)
-        if "delta" in c and "add_dirs_by_table" in c:
-            for t, ds in c["add_dirs_by_table"].items():
+        if "delta" in c:
+            for t, ds in c.get("add_dirs_by_table", {}).items():
                 _merge(t, set(ds) if ds is not None else None)
             continue
-        c = _hydrate_delta(out_dir, c, with_stats=False)
-        if "add" in c or ("tables" not in c and "ckpt" not in c):
-            per = c.get("add", {})
-        else:  # pre-r10 full form: diff against the previous snapshot
-            prev = _snapshot_files(out_dir, v - 1)
-            cur = _snapshot_files(out_dir, v)
-            per = {
-                t: sorted(set(fs) - set(prev.get(t, [])))
-                for t, fs in cur.items()
-            }
-        for t, rels in per.items():
+        for t, rels in _commit_adds(out_dir, v, c).items():
             if rels:
                 _merge(t, {os.path.dirname(f) for f in rels})
     return dirs
@@ -3024,43 +2872,6 @@ def vacuum(
     return sorted(removed)
 
 
-def _live_table_names(out_dir: str, version: int) -> set[str]:
-    """The table NAMES a snapshot references — O(#tables + deltas)
-    metadata, never a file-list scan: delta commits carry names as their
-    add/remove keys, r10 checkpoints carry ``table_names`` in the commit
-    JSON, and older checkpoints fall back to a columnar unique() over the
-    sidecar's dictionary-encoded table column (pre-r9 inline forms just
-    read their keys)."""
-    names: set[str] = set()
-    v = version
-    while True:
-        commit = _load_commit(out_dir, v)
-        if "table_names" in commit:
-            names.update(commit["table_names"])
-            return names
-        if "ckpt" in commit:
-            arr = LOG_STORE.read_parquet(
-                os.path.join(_manifest_path(out_dir), commit["ckpt"]),
-                columns=["table"],
-            )
-            names.update(arr.column("table").unique().to_pylist())
-            return names
-        if "tables" in commit:
-            names.update(commit["tables"])
-            return names
-        names.update(commit.get("add", {}))
-        names.update(commit.get("remove", {}))
-        # spilled mega-deltas (r12) carry their names as count keys
-        names.update(commit.get("n_add_by_table", {}))
-        names.update(commit.get("n_remove_by_table", {}))
-        v = commit.get("parent", v - 1)
-        if v < 1:
-            raise RuntimeError(
-                f"commit chain for version {version} in {out_dir} has no "
-                "checkpoint ancestor — log is corrupt"
-            )
-
-
 def _warn_hollow(
     out_dir: str, version: int, table: str, rel: str, n_more: int
 ) -> None:
@@ -3160,7 +2971,7 @@ def _vacuum_data_spark(
         if entry.endswith(".parquet")
     }
     for v in retained:
-        candidates |= _live_table_names(out_dir, v)
+        candidates |= set(_store_table_counts(out_dir, v))
     # persisted: reused by the sanity probe, the orphan scan, and each
     # pin's hollow probe — one distributed walk, not three
     disk = _disk_files_df(spark, out_dir, sorted(candidates)).persist()

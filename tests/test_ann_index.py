@@ -201,15 +201,13 @@ def test_search_prunes_to_probed_cells(spark, tmp_path):
 
 
 @pytest.mark.heavy
-def test_pre_migration_members_refuse_and_migrate(spark, tmp_path):
+def test_pre_migration_members_refuse(spark, tmp_path):
     """Round-6 advice: an index written with digit-only cell buckets must
-    refuse fold AND search loudly, and migrate_ann_index must restore
-    matching with identical results."""
+    refuse fold AND search loudly, pointing at a rebuild."""
     import pytest as pt
 
     from chainweb_data_spark.streaming.ann_index import (
         AnnIndexFormatError,
-        migrate_ann_index,
         unprefixed_member_cells,
     )
     from chainweb_data_spark.streaming.publish import rewrite_published
@@ -220,7 +218,6 @@ def test_pre_migration_members_refuse_and_migrate(spark, tmp_path):
     update_ann_index(spark, _df(spark, rows), out, 0, cents, cb)
     assert unprefixed_member_cells(out) == []
     one = _df(spark, rows[:1])
-    want = _pairs(ann_index_search(spark, out, one, cents, cb, nprobe=1, k=K))
 
     # forge the pre-migration digit-only format
     members = read_published(spark, out, MEMBERS_TABLE)
@@ -229,20 +226,10 @@ def test_pre_migration_members_refuse_and_migrate(spark, tmp_path):
     ).repartition("key_bucket")
     rewrite_published(spark, out, MEMBERS_TABLE, legacy)
     assert unprefixed_member_cells(out) != []
-    with pt.raises(AnnIndexFormatError, match="migrate_ann_index"):
+    with pt.raises(AnnIndexFormatError, match="rebuild the store"):
         ann_index_search(spark, out, one, cents, cb, nprobe=1, k=K)
     with pt.raises(AnnIndexFormatError):
         update_ann_index(spark, _df(spark, rows[:5]), out, 1, cents, cb)
-
-    n = migrate_ann_index(spark, out)
-    assert n == 60
-    assert unprefixed_member_cells(out) == []
-    got = _pairs(ann_index_search(spark, out, one, cents, cb, nprobe=1, k=K))
-    assert got == want
-    # idempotent re-run, and the fold works again
-    assert migrate_ann_index(spark, out) == 60
-    update_ann_index(spark, _df(spark, rows[:5]), out, 1, cents, cb)
-    assert read_published(spark, out, MEMBERS_TABLE).count() == 60
 
 
 # ---------------------------------------------------------------------------

@@ -368,46 +368,32 @@ def test_crash_at_the_single_commit_leaves_nothing(spark, tmp_path, monkeypatch)
 
 
 @pytest.mark.heavy
-def test_legacy_two_log_store_refuses_and_migrates(spark, tmp_path):
+def test_legacy_two_log_store_refuses(spark, tmp_path):
     """A store written by the pre-unified layout (index under its own log)
-    must REFUSE to resume (the unified probe would silently see an empty
-    index) and migrate_curation_store must adopt it metadata-only, after
-    which near-dups against the legacy history flag again."""
+    must REFUSE to resume — the unified probe would silently see an empty
+    index — and point at a rebuild."""
     import pytest as _pytest
 
     from chainweb_data_spark.streaming.curation import (
         CurationStoreFormatError,
-        migrate_curation_store,
     )
     from chainweb_data_spark.streaming.dedup_index import update_dedup_index
-    from chainweb_data_spark.streaming.publish import (
-        publish_batch,
-        read_published,
-    )
+    from chainweb_data_spark.streaming.publish import publish_batch
 
     out = str(tmp_path / "cur")
     # forge a legacy store: batch 0 curated via the old two-log shape —
-    # curation tables in the parent log (curation_log with the PRE-r7
-    # six-column schema, no n_contam), index folded under its own log
+    # curation tables in the parent log, index folded under its own log
     seed = _docs(spark, [(1, BASE_TEXT)])
     update_dedup_index(
         spark, seed, os.path.join(out, "dedup_index"), batch_id=0
     )
-    old_log = spark.createDataFrame(
-        [(0, 1, 1, 0, 0, 0)],
-        "batch_id long, n_in long, n_kept long, n_quality long, "
-        "n_exact long, n_near long",
-    )
     publish_batch(
         spark,
-        {
-            "curated_docs": seed.withColumn("batch_id", F.lit(0)),
-            "curation_log": old_log,
-        },
+        {"curated_docs": seed.withColumn("batch_id", F.lit(0))},
         out,
-        pks={"curated_docs": ("doc_id",), "curation_log": ("batch_id",)},
+        pks={"curated_docs": ("doc_id",)},
     )
-    with _pytest.raises(CurationStoreFormatError, match="migrate_curation_store"):
+    with _pytest.raises(CurationStoreFormatError, match="rebuild the store"):
         curate_batch(
             spark,
             _docs(spark, [(10, BASE_TEXT + " tail")]),
@@ -415,30 +401,6 @@ def test_legacy_two_log_store_refuses_and_migrates(spark, tmp_path):
             batch_id=1,
             min_quality=MIN_Q,
         )
-    adopted = migrate_curation_store(spark, out)
-    assert adopted == [
-        "dedup_index/bucket_counts",
-        "dedup_index/minhash_bands",
-        "dedup_index/shingle_sets",
-    ]
-    assert migrate_curation_store(spark, out) == []  # idempotent
-    # the legacy fold is visible through the parent log...
-    assert read_published(spark, out, "dedup_index/minhash_bands").count() > 0
-    # ...the pre-r7 curation_log was backfilled with n_contam = 0 in the
-    # same commit (no mixed-schema table awaits the resumed sink)...
-    log0 = read_published(spark, out, "curation_log").collect()
-    assert [(r["batch_id"], r["n_contam"]) for r in log0] == [(0, 0)]
-    # ...and a resumed batch flags a near-dup of the LEGACY history
-    s = curate_batch(
-        spark,
-        _docs(spark, [(10, BASE_TEXT + " tail")]),
-        out,
-        batch_id=1,
-        min_quality=MIN_Q,
-    )
-    assert s["n_near"] == 1
-    log = read_published(spark, out, "curation_log")
-    assert log.count() == 2 and "n_contam" in log.columns
 
 
 def test_null_text_rejects_at_quality(spark, tmp_path):

@@ -402,20 +402,18 @@ def test_compaction_preserves_rows_and_bounds_files(spark, tmp_path):
 
 
 @pytest.mark.heavy
-def test_pre_migration_bands_refuse_and_migrate(spark, tmp_path):
+def test_pre_migration_bands_refuse(spark, tmp_path):
     """Round-6 advice: an index written before the 'h'-prefixed key_bucket
     format must REFUSE the pruned cross-era probe (silent history loss
-    otherwise), and migrate_dedup_index must restore matching."""
+    otherwise), pointing at a rebuild."""
     import pytest as pt
 
     from chainweb_data_spark.streaming.dedup_index import (
         DedupIndexFormatError,
         check_bands_format,
-        migrate_dedup_index,
         unprefixed_band_buckets,
     )
     from chainweb_data_spark.streaming.publish import (
-        read_manifest,
         read_published,
         rewrite_published,
     )
@@ -435,40 +433,21 @@ def test_pre_migration_bands_refuse_and_migrate(spark, tmp_path):
     )
     rewrite_published(spark, out, "minhash_bands", legacy)
     assert unprefixed_band_buckets(out) != []
-    with pt.raises(DedupIndexFormatError, match="migrate_dedup_index"):
+    with pt.raises(DedupIndexFormatError, match="rebuild the store"):
         check_bands_format(out)
     b1 = _docs(spark, [(10, BASE_TEXT + " tail")])
     with pt.raises(DedupIndexFormatError):
         update_dedup_index(spark, b1, out, batch_id=1)
 
-    # migrate: one commit, live list fully 'h'-prefixed, probe matches the
-    # pre-prefix history again, and a re-run is an idempotent no-op
-    n = migrate_dedup_index(spark, out)
-    assert n == bands.count()
-    assert unprefixed_band_buckets(out) == []
-    from chainweb_data_spark.streaming.publish import history
-
-    assert history(out)[-1]["op"] == "rewrite"
-    m = read_manifest(out)
-    assert all(
-        f.split("=", 1)[1].startswith("h")
-        for f in m["tables"]["minhash_bands"]
-        if f.startswith("key_bucket=")
-    )
-    assert migrate_dedup_index(spark, out) == n
-    got = _flags(update_dedup_index(spark, b1, out, batch_id=1))
-    assert (10, 1) in got
-
 
 @pytest.mark.heavy
 def test_pre_migration_detection_legacy_layout(spark, tmp_path):
-    """Log-less (atomic=False) indexes detect via listdir and migrate via
-    the park-and-rename directory swap."""
+    """Log-less (atomic=False) indexes detect the unprefixed layout via
+    listdir and refuse."""
     import pytest as pt
 
     from chainweb_data_spark.streaming.dedup_index import (
         DedupIndexFormatError,
-        migrate_dedup_index,
         unprefixed_band_buckets,
     )
 
@@ -493,27 +472,18 @@ def test_pre_migration_detection_legacy_layout(spark, tmp_path):
     b1 = _docs(spark, [(10, BASE_TEXT + " tail")])
     with pt.raises(DedupIndexFormatError):
         update_dedup_index(spark, b1, out, batch_id=1, atomic=False)
-    migrate_dedup_index(spark, out, atomic=False)
-    assert unprefixed_band_buckets(out) == []
-    got = _flags(
-        update_dedup_index(spark, b1, out, batch_id=1, atomic=False)
-    )
-    assert (10, 1) in got
 
 
 def test_pre_migration_bands_prefixed_unified_store(spark, tmp_path):
     """Round-7 advice: in a UNIFIED curation store the bands live under
-    'dedup_index/minhash_bands' in the parent log — migrate_dedup_index
-    must take the same table_prefix as update_dedup_index, and the
-    format error must name the PREFIXED table with the prefixed fix
-    (the unprefixed call would resolve an empty table and 'migrate'
-    0 rows, leaving the store unresumable)."""
+    'dedup_index/minhash_bands' in the parent log — the format check
+    takes the same table name as update_dedup_index, and the format
+    error must name the PREFIXED table."""
     import pytest as pt
 
     from chainweb_data_spark.streaming.dedup_index import (
         DedupIndexFormatError,
         check_bands_format,
-        migrate_dedup_index,
         unprefixed_band_buckets,
         update_dedup_index,
     )
@@ -544,16 +514,8 @@ def test_pre_migration_bands_prefixed_unified_store(spark, tmp_path):
     )
     rewrite_published(spark, out, t_bands, legacy)
     assert unprefixed_band_buckets(out, t_bands) != []
-    # the error names the prefixed table AND the prefixed fix
+    # the error names the prefixed table
     with pt.raises(
-        DedupIndexFormatError, match="table_prefix='dedup_index/'"
+        DedupIndexFormatError, match="dedup_index/minhash_bands at "
     ):
         check_bands_format(out, t_bands)
-
-    # the advertised fix actually migrates the prefixed table
-    n = migrate_dedup_index(spark, out, table_prefix=prefix)
-    assert n == bands.count() and n > 0
-    assert unprefixed_band_buckets(out, t_bands) == []
-    # and the unprefixed call on this store is the 0-row trap the
-    # prefix parameter exists to avoid
-    assert migrate_dedup_index(spark, out) == 0

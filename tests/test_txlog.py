@@ -163,30 +163,43 @@ def test_file_skipping_by_footer_stats(spark, tmp_path):
     assert loose.count() == 300
 
 
-def test_legacy_full_manifests_still_resolve(spark, tmp_path):
-    """A directory written by the v5 full-rewrite manifest (every v<N>.json
-    a complete snapshot, CURRENT authoritative) reads unchanged, and new
-    commits append deltas on top of it."""
+def test_unstamped_or_future_format_store_is_refused(spark, tmp_path):
+    """Every commit is stamped with LOG_FORMAT.  A log written without
+    the stamp (the v5 full-rewrite manifest: every v<N>.json a complete
+    snapshot) or by a newer format is refused by every reader and
+    writer, with an error naming the store, the version and the remedy."""
     out = str(tmp_path / "t6")
-    _batch(spark, 0, 10).write.parquet(os.path.join(out, "t.parquet"))
-    files = sorted(
-        f
-        for f in os.listdir(os.path.join(out, "t.parquet"))
-        if not f.startswith(("_", "."))
-    )
     mdir = os.path.join(out, "_manifest")
     os.makedirs(mdir)
-    for v in (1, 2):  # old format: full snapshot, no ts/op
+    for v in (1, 2):  # old format: full snapshot, no ts/op, no stamp
         with open(os.path.join(mdir, "v%09d.json" % v), "w") as f:
-            json.dump({"version": v, "tables": {"t": files if v == 2 else []}}, f)
-    with open(os.path.join(mdir, "CURRENT"), "w") as f:
-        f.write("v%09d.json" % 2)
+            json.dump({"version": v, "tables": {"t": []}}, f)
+    for fn in (
+        lambda: read_manifest(out),
+        lambda: history(out),
+        lambda: read_published(spark, out, "t"),
+        lambda: publish_batch(spark, {"t": _batch(spark, 0, 10)}, out, pks=PK),
+    ):
+        with pytest.raises(
+            pub.LogFormatError, match=r"t6'.* v[12] .*rebuild the store"
+        ):
+            fn()
 
-    assert read_published(spark, out, "t").count() == 10
-    assert history(out)[1]["kind"] == "legacy"
-    publish_batch(spark, {"t": _batch(spark, 10, 20)}, out, pks=PK)
-    assert read_manifest(out)["version"] == 3
-    assert read_published(spark, out, "t").count() == 20
+    # a stamp from a future writer is refused the same way
+    out2 = str(tmp_path / "t6f")
+    publish_batch(spark, {"t": _batch(spark, 0, 10)}, out2, pks=PK)
+    path = os.path.join(out2, "_manifest", "v%09d.json" % 2)
+    with open(path) as f:
+        c = json.load(f)
+    assert c["format"] == pub.LOG_FORMAT
+    c["format"] = pub.LOG_FORMAT + 1
+    with open(path, "w") as f:
+        json.dump(c, f)
+    pub._SNAP_CACHE.clear()
+    with pytest.raises(
+        pub.LogFormatError, match=r"t6f'.* v2 has format 2.*rebuild the store"
+    ):
+        read_published(spark, out2, "t")
 
 
 def test_vacuum_horizon_bounds_time_travel(spark, tmp_path):

@@ -9,7 +9,6 @@ The load-bearing property throughout: the spark-built checkpoint is
 VALUE-IDENTICAL to the driver-built one (same rows, same order, same
 stats encoding), so every sidecar consumer works on either."""
 
-import json
 import os
 
 import pytest
@@ -30,7 +29,9 @@ PK = {"t": ("id",)}
 def _meta_commit(out, i, spark=None):
     """One synthetic delta commit (deterministic file names, so twin
     stores are byte-comparable): adds a file to two tables with stats,
-    and every 5th commit also removes an earlier file."""
+    and every 5th commit also removes the "u" file the commit two
+    versions back added — still live, since only this rule removes "u"
+    files, whatever ``i`` the caller passes."""
     v = pub._latest_version(out) + 1
     add = {
         "t": [f"height_bucket={i % 4}/part-{i:04d}.parquet"],
@@ -38,9 +39,10 @@ def _meta_commit(out, i, spark=None):
     }
     stats_add = {"t": {add["t"][0]: {"id": [i * 10, i * 10 + 9]}}}
     remove = {}
-    if i and i % 5 == 0:
-        j = i - 2
-        remove = {"u": [f"part-u-{j:04d}.parquet"]}
+    if i and i % 5 == 0 and v > 2:
+        older = pub._load_commit(out, v - 2).get("add", {}).get("u")
+        if older:
+            remove = {"u": older}
     pub._commit_delta(
         out, v, add, remove, stats_add, op="publish", spark=spark
     )
@@ -604,10 +606,22 @@ def test_spark_checkpoint_derives_table_counts_from_metadata(
     )
     assert c32["n_files"] == sum(len(fs) for fs in truth.values())
 
+    # a remove naming a file that is not live breaks the invariant: both
+    # checkpoint builders refuse the commit instead of warning
+    while pub._latest_version(out) < 3 * pub.CHECKPOINT_EVERY - 1:
+        _meta_commit(out, pub._latest_version(out), spark=spark)
+    for sp in (None, spark):
+        with pytest.raises(RuntimeError, match="not live"):
+            pub._commit_delta(
+                out, 3 * pub.CHECKPOINT_EVERY, {},
+                {"u": ["part-u-never-added.parquet"]}, {}, spark=sp,
+            )
+    assert pub._latest_version(out) == 3 * pub.CHECKPOINT_EVERY - 1
+
 
 def test_store_table_counts_matches_snapshots(tmp_path):
     """The per-table metadata fold equals the resolved snapshot at every
-    probed version (and reports None for pre-r12 sidecar ancestors)."""
+    probed version."""
     out = str(tmp_path / "stc")
     _grow_meta(out, 20, seed_files=3)
     latest = pub._latest_version(out)
@@ -621,17 +635,6 @@ def test_store_table_counts_matches_snapshots(tmp_path):
         got = pub._store_table_counts(out, v)
         assert got is not None
         assert {t: n for t, n in got.items() if n > 0} == want, v
-    # simulate a pre-r12 checkpoint ancestor: strip the field
-    mdir = os.path.join(out, "_manifest")
-    ck = pub.CHECKPOINT_EVERY
-    p = os.path.join(mdir, f"v{ck:09d}.json")
-    c = json.load(open(p))
-    if "n_files_by_table" in c:
-        del c["n_files_by_table"]
-        os.remove(p)
-        with open(p, "w") as f:
-            json.dump(c, f)
-        assert pub._store_table_counts(out, latest) is None
 
 
 def test_vacuum_spares_in_flight_ckpt_build_staging(tmp_path):
